@@ -13,7 +13,10 @@ DataFrame operators:
   candidate merge (O4b)            -> groupBy(probe,id).agg(min edits
                                       per field -> map)
   global edit cap (O4c, clean.go:
-  54-90)                           -> aggregate(map_values) <= MaxEdits
+  54-90)                           -> aggregate(map_values) <= MaxEdits,
+                                      then drop candidates missing a
+                                      required field (JVM, before the
+                                      similarity UDFs)
   verification + thresholds (O4d,
   fuzzy_matcher_core.go:220-260)   -> per-field similarity kernels with
                                       the reference decision order
@@ -50,7 +53,14 @@ completion families and the prefilter stay. Recall is probabilistic,
 tuned by (block_bands, block_rows) and validated >= 0.99 against the
 brute-force oracle in tests/test_matcher_recall.py for both modes.
 
-Probe side is assumed small relative to the corpus and is broadcast.
+Probe side is assumed small relative to the corpus and is broadcast
+into every blocking join. The probe relation is therefore read once per
+field and family (plus verification): callers should hand ``search`` a
+materialized probe batch, as ``matcher_api.FuzzyMatcher`` does with one
+eager localCheckpoint per search, so those broadcasts read in-memory
+rows instead of re-running the caller's probe scan. The base relation
+is read at as many points; the facade materializes it once per write
+generation.
 """
 
 from __future__ import annotations
@@ -378,6 +388,14 @@ def search(
         F.aggregate(F.map_values("_fed"), F.lit(0), lambda a, x: a + x)
         <= F.lit(cfg.core.max_edits)
     )
+    # required-field prefilter: a candidate missing a required field
+    # (min_distance > 0) is rejected by the `~present` test below anyway
+    # (fuzzy_matcher_core.go:228-233); dropping it here, in the JVM,
+    # keeps it out of the verification join and the Python similarity
+    # kernels
+    for f, fp in cfg.fields.items():
+        if fp.min_distance > 0:
+            merged = merged.where(F.map_contains_key("_fed", F.lit(f)))
 
     # verification (O4d): join values back, reference decision order
     b_vals = base.select(

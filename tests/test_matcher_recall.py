@@ -169,3 +169,99 @@ def test_zero_budget_stored_prefix_mirror(spark):
     )
     got = {r.id for r in search(base, probes, cfg).collect()}
     assert got == {1, 2}  # stored prefix (mirror) + exact
+
+
+def _scored_oracle(cfg, probes, members=MEMBERS):
+    """Brute-force top-k with scores for any ``cfg`` over the member
+    fields: {(probe_id, member_id): score}. Per field, a stored value
+    equal to the probe or in a prefix relation with it costs 0 edits at
+    any budget (exact, free completion and mirror walks); otherwise the
+    trie-edit distance counts if within min(max_edits, max_depth) and
+    both values are non-empty. Invalid probes get zero budgets."""
+    out = {}
+    mrows = [
+        (mid, {"firstname": _norm(fn), "surname": _norm(sn),
+               "birthdate": bd.replace("-", "")})
+        for mid, fn, sn, bd in members
+    ]
+    for pid, fn, sn, bd in probes:
+        valid = _is_valid(fn, sn)
+        pvals = {"firstname": _norm(fn), "surname": _norm(sn),
+                 "birthdate": bd.replace("-", "")}
+        scored = []
+        for mid, mvals in mrows:
+            edits = {}
+            for f, fp in cfg.fields.items():
+                p, m = pvals[f], mvals[f]
+                budget = min(fp.max_edits, fp.max_depth) if valid else 0
+                if p == m or (p and m.startswith(p)) or (m and p.startswith(m)):
+                    edits[f] = 0
+                elif budget > 0 and p and m:
+                    e = trie_edit_distance(p, m)
+                    if e <= budget:
+                        edits[f] = e
+            if sum(edits.values()) > cfg.core.max_edits:
+                continue
+            score, ok = 0.0, True
+            for f, fp in cfg.fields.items():
+                if f not in edits:
+                    if fp.min_distance > 0:
+                        ok = False
+                        break
+                    continue
+                sim = similarity(pvals[f], mvals[f], fp.method)
+                if sim < fp.min_distance:
+                    sim = 0.0
+                if fp.min_distance > 0 and (sim < fp.min_distance or not mvals[f]):
+                    ok = False
+                    break
+                if sim > 0:
+                    score += fp.weight * sim
+            if ok:
+                scored.append((score, mid))
+        scored.sort(key=lambda t: (-t[0], t[1]))
+        for score, mid in scored[: cfg.top_k]:
+            out[(pid, mid)] = score
+    return out
+
+
+def test_required_field_prefilter_mixed_config(spark):
+    """Optional (min_distance=0) and required fields together: the
+    required-field prefilter runs before verification, so a pair that
+    matches only on the optional field is rejected, and every kept
+    pair scores exactly as the brute-force oracle says, including pairs
+    that match on the required fields alone."""
+    from fuzzy_matcher_spark.config import CoreParams, FieldParams, MatchConfig
+
+    cfg = MatchConfig(
+        fields={
+            # budget 1: many true pairs miss the optional field
+            "firstname": FieldParams(1, 1, 0.3, "jaro", 0.0),
+            "surname": FieldParams(2, 2, 0.3, "jaro", 0.9),
+            "birthdate": FieldParams(2, 2, 0.4, "default", 1.0),
+        },
+        core=CoreParams(max_edits=6),
+    )
+    only_optional = [
+        (1000, "John", "Zzyzx", "1800-01-01"),
+        (1001, "Michael", "Qwerty", "1700-02-02"),
+    ]
+    required_only = [(1002, "Xavier", "Smith", "1990-05-15")]
+    probes = _gen_probes() + only_optional + required_only
+    want = _scored_oracle(cfg, probes)
+
+    base = members_df(spark, cfg)
+    got_rows = search(
+        base, probes_df(spark, probes, cfg), cfg, is_valid_col=probe_validity_col()
+    ).collect()
+    got = {(r.probe_id, r.id): r.score for r in got_rows}
+
+    assert len(want) > 80, f"oracle should match most probes, got {len(want)}"
+    assert not any(pid in (1000, 1001) for pid, _ in got), got
+    assert (1002, 1) in got  # required fields alone are enough
+    assert got.keys() == want.keys(), (
+        sorted(want.keys() - got.keys())[:10],
+        sorted(got.keys() - want.keys())[:10],
+    )
+    for k, s in want.items():
+        assert got[k] == pytest.approx(s, abs=1e-9), (k, got[k], s)

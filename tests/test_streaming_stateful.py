@@ -145,7 +145,7 @@ def test_seen_func_ttl_verdict_replay_deterministic():
     the executor wall clock: with a wall-clock read, a key near the
     TTL boundary flipped between duplicate and first-seen when the
     batch was replayed after a delay. Simulated here exactly: same
-    prior state, same trigger stamp, second execution 300 ms of real
+    prior state, same trigger stamp, second execution 100 ms of real
     time later — with ttl_ms=50 a wall-clock implementation flips,
     the stamp-based one must not."""
     from fuzzy_matcher_spark.streaming.stateful import _seen_func
@@ -155,7 +155,7 @@ def test_seen_func_ttl_verdict_replay_deterministic():
     prior = (0, 2, t0 - 40)  # canonical=0, n_seen=2, last arrival 40ms ago
 
     first = _verdicts(func, _FakeGroupState(t0, prior))
-    time.sleep(0.3)  # wall clock moves well past ttl_ms
+    time.sleep(0.1)  # wall clock moves well past ttl_ms
     replay = _verdicts(func, _FakeGroupState(t0, prior))
 
     assert first == replay == [(5, True, 0, 2)]  # still a duplicate
